@@ -31,8 +31,12 @@ _IRI_RE = re.compile(r"^(https?|urn|file|ftp):")
 def register_views(
     spark: SparkSession, engine: CdcEngine, prefix: str = ""
 ) -> list[str]:
-    """Create temp views over the live engine state. Views are lazy —
-    each query re-reads the current snapshot (no staleness)."""
+    """Create temp views over the engine state at its current snapshot.
+    A view pins the file list of the snapshot it was built from: later
+    commits stay invisible to it and retention may expire its files, so
+    re-register after the engine commits (``QueryServer`` does so when
+    the table, ledger or metrics version moves). Registration lists the
+    files of every view; it reads no data."""
     views = {
         f"{prefix}repo_files": engine.current_state(),
         f"{prefix}rdf_files_wide": engine.live_rows(),

@@ -933,3 +933,145 @@ def test_migration_crash_between_publish_and_cleanup(
     assert rows == {"http://a/s", "http://b/s"}  # nothing lost
     assert srv._loaded_quads().count() == 2  # nothing duplicated
     assert not any(n.startswith("graph=") for n in os.listdir(root))
+
+
+# -- version-keyed serving state ----------------------------------------------
+
+_EV_SCHEMA = (
+    "seq long, op string, repo string, path string, commit string,"
+    " lang string, content string, event_ts timestamp"
+)
+_COUNT_ALL = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
+
+
+def _ingest(engine, spark, seq: int, path: str, batch_id: str) -> None:
+    ev = spark.createDataFrame(
+        [(seq, "I", "rc", path, "c1", "en", f"print({seq})", None)],
+        _EV_SCHEMA,
+    )
+    engine.apply_batch(ev, batch_id)
+
+
+def _sparql_get(srv, text: str) -> dict:
+    from urllib.parse import quote
+
+    code, doc = _get(srv, f"/sparql?query={quote(text)}")
+    assert code == 200, doc
+    return doc
+
+
+def _count_all(srv) -> int:
+    doc = _sparql_get(srv, _COUNT_ALL)
+    return int(doc["results"]["bindings"][0]["n"]["value"])
+
+
+def _count_calls(monkeypatch, owner, name: str) -> list:
+    """Wrap ``owner.name`` for the test; the list grows by one per call."""
+    calls = []
+    real = getattr(owner, name)
+
+    def wrapper(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(owner, name, wrapper)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def cache_server(spark, tmp_path_factory):
+    """A server of its own, so the serving-state counters below start
+    from a known state whatever the other tests in this module did."""
+    from etl_pipeline_rdf_star_spark.http_serving import QueryServer
+    from etl_pipeline_rdf_star_spark.streaming.cdc import CdcEngine
+
+    eng = CdcEngine(
+        spark, str(tmp_path_factory.mktemp("cache_wh")), mode="mor", n_buckets=4
+    )
+    _ingest(eng, spark, 0, "base.py", "cache-b0")
+    srv = QueryServer(
+        spark, eng, graph_store=str(tmp_path_factory.mktemp("cache_graphs"))
+    ).start()
+    yield srv
+    srv.stop()
+
+
+def test_server_start_registers_no_views(cache_server):
+    # views are registered by the first SQL or /stats request, not eagerly
+    assert cache_server.views == [] and cache_server._views_key is None
+
+
+def test_repeated_sparql_rebuilds_nothing(cache_server, monkeypatch):
+    import etl_pipeline_rdf_star_spark.queries.sparql as sq
+    from etl_pipeline_rdf_star_spark import http_serving
+
+    first = _sparql_get(cache_server, _COUNT_ALL)
+    views = _count_calls(monkeypatch, http_serving, "register_views")
+    datasets = _count_calls(monkeypatch, sq, "dataset_from_engine")
+    for _ in range(3):
+        assert _sparql_get(cache_server, _COUNT_ALL) == first
+    assert views == [] and datasets == []
+
+
+def test_stats_reports_plan_cache_and_dataset_builds(cache_server):
+    code, before = _get(cache_server, "/stats")
+    assert code == 200
+    text = "SELECT ?s WHERE { ?s ?p ?o } LIMIT 1"
+    assert _sparql_get(cache_server, text) == _sparql_get(cache_server, text)
+    code, after = _get(cache_server, "/stats")
+    assert code == 200
+    b, a = before["plan_cache"], after["plan_cache"]
+    assert a["misses"] == b["misses"] + 1
+    assert a["hits"] == b["hits"] + 1
+    assert a["entries"] == b["entries"] + 1
+    # no commit or load in between: the dataset was reused, not rebuilt
+    assert after["dataset_builds"] == before["dataset_builds"] >= 1
+
+
+def test_sql_views_register_once_per_commit(cache_server, spark, monkeypatch):
+    from etl_pipeline_rdf_star_spark import http_serving
+
+    calls = _count_calls(monkeypatch, http_serving, "register_views")
+    # a commit first, so the views are stale whatever ran before
+    _ingest(cache_server.engine, spark, 10, "sql1.py", "cache-sql1")
+    sql = {"sql": "SELECT count(*) AS n FROM repo_files"}
+    r1, r2 = _post(cache_server, sql), _post(cache_server, sql)
+    assert r1 == r2 and r1[0] == 200
+    assert len(calls) == 1  # no commit between the two requests
+
+    n_before = _count_all(cache_server)
+    _ingest(cache_server.engine, spark, 11, "sql2.py", "cache-sql2")
+    code, doc = _post(
+        cache_server,
+        {"sql": "SELECT 1 FROM repo_files WHERE path = 'sql2.py'", "form": "ask"},
+    )
+    assert (code, doc) == (200, {"boolean": True})
+    assert len(calls) == 2
+    assert _count_all(cache_server) > n_before  # SPARQL sees it too
+
+
+def test_graph_load_invalidates_cached_dataset(cache_server, tmp_path, monkeypatch):
+    ask = "ASK { <http://cache.example/s> <http://cache.example/p> ?o }"
+    assert _sparql_get(cache_server, ask) == {"boolean": False}
+    builds = cache_server._dataset_builds
+    (tmp_path / "extra.ttl").write_text(
+        '<http://cache.example/s> <http://cache.example/p> "v" .\n'
+    )
+    monkeypatch.setattr(cache_server, "input_dir", str(tmp_path))
+    code, doc = _post_empty(cache_server, "/api/graphs/load?file=extra.ttl")
+    assert code == 200 and doc["tripleCount"] == 1
+    assert _sparql_get(cache_server, ask) == {"boolean": True}
+    assert cache_server._dataset_builds == builds + 1
+
+
+def test_distinct_texts_keep_serving_state_bounded(cache_server):
+    # compile only (no execution): 300 distinct texts at one version
+    with cache_server._view_lock:
+        cache_server._compiled(_COUNT_ALL)  # the dataset for this version
+        builds = cache_server._dataset_builds
+        for i in range(300):
+            cache_server._compiled(
+                f"ASK {{ ?s <http://cache.example/p{i}> ?o }}"
+            )
+    assert len(cache_server._plan_cache) == cache_server._plan_cache_size == 128
+    assert cache_server._dataset_builds == builds  # one dataset, reused
